@@ -89,12 +89,17 @@ def _plan_exact(
     """Exact event budgets via a TWO-LEVEL prefix sum (r7, VERDICT r6
     'what's wrong' #2): the former single ``Window.orderBy(lsn)`` put every
     distinct LSN through one task — effectively corpus-sized at scale.
-    Now LSNs hash into ≤ ``n_chunks`` ordered ranges; the within-chunk
+    Now LSNs are range-partitioned into ≤ ``n_chunks`` ordered value
+    ranges (``chunk = floor((lsn - lo) / width)``); the within-chunk
     running sum is a window PARTITIONED by chunk (parallel, bounded by the
     chunk's distinct LSNs) and only the ≤ ``n_chunks`` chunk totals pass
     through a single-partition window (bounded by construction, marked by
-    a constant non-foldable partition key). Epoch ids are the same
-    exclusive-cumulative-count ÷ target as before — output identical."""
+    a constant non-foldable partition key). The two-level sum is only
+    correct because chunk order matches LSN order: every LSN of an earlier
+    chunk precedes every LSN of a later one, so a chunk's exclusive
+    running total is exactly the count of events at smaller LSNs. Epoch
+    ids are the same exclusive-cumulative-count ÷ target as before —
+    output identical."""
     per_lsn = log.groupBy("lsn").agg(F.count(F.lit(1)).alias("cnt"))
     row = per_lsn.agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi")).first()
     if row["lo"] is None:

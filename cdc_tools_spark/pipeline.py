@@ -44,7 +44,6 @@ class ReplayConfig:
     epoch_events: int = 1_000_000
     key_cols: tuple[str, ...] = ("repo", "path")
     num_buckets: int = 64
-    compaction_strategy: str = "max_by"
     epoch_strategy: str = "quantile"
     collect_metrics: bool = True
     total_events: int | None = None  # skip the planner's count pass if known

@@ -22,6 +22,7 @@ below-cores number of local files.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,13 +36,14 @@ MIN_PARALLELIZE_BYTES = 256 << 10
 
 
 def _local_path(uri: str) -> str | None:
-    if uri.startswith("file:"):
-        path = uri[5:]
-        while path.startswith("//"):
-            path = path[1:]
-        return path
+    """Driver-readable path of a ``file:`` URI or absolute path; None for
+    anything else, including ``file://host/...`` URIs whose authority
+    names another machine's file system."""
     if uri.startswith("/"):
         return uri
+    u = urlparse(uri)
+    if u.scheme == "file" and not u.netloc:
+        return u.path
     return None
 
 

@@ -45,7 +45,7 @@ def test_update_before_never_wins(spark):
     assert len(out) == 1 and out[0]["content"] == "v1"
 
 
-@pytest.mark.parametrize("other", ["window", "salted_window"])
+@pytest.mark.parametrize("other", ["window"])
 def test_compaction_strategies_agree(spark, other):
     log = synthetic_binlog(spark, 5_000, n_keys=300, hot_key_pct=40, seed=7)
     a = compact_last_write_wins(log, strategy="max_by")
